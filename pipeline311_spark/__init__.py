@@ -7,9 +7,10 @@ operators (dedup, similarity search, text analysis, multimodal columns).
 
 Everything is DataFrame/SQL: logical plans are declared with the
 DataFrame API (or SQL) and Catalyst/Tungsten/AQE pick the physical
-strategy.  Python UDFs appear only where Spark has no builtin
-(NFKD->ASCII normalization; stubbed multimodal decoders), and always as
-Arrow-batched pandas UDFs.
+strategy.  Python UDFs appear only where Spark has no builtin (stubbed
+multimodal decoders, custom grouped operators), and always as
+Arrow-batched pandas UDFs.  NFKD->ASCII normalization runs in the JVM
+(ICU4J via ``reflect``).
 
 Layout (see SURVEY.md section 7.1):
   session.py    SparkSession factory (AQE on, tz pinned)

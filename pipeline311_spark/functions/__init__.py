@@ -1,9 +1,8 @@
 """Column-level functions: the reference's per-row cleaning kernel
 (common.py:112-224 ``process_row``) decomposed into vectorized Spark
 ``Column`` expressions (SURVEY §2.3 P1-P19), plus timestamp and geometry
-helpers.  Only one true Python UDF exists in the whole engine:
-NFKD->ASCII normalization (no Spark builtin), as an Arrow-batched
-pandas UDF.
+helpers.  No Python UDF: even NFKD->ASCII normalization (no Spark
+builtin) runs in the JVM, via ICU4J from Spark's own classpath.
 """
 
 from pipeline311_spark.functions.cleaning import (  # noqa: F401

@@ -117,9 +117,12 @@ def text_field_guard(col: Column | str, max_len: int = 2000) -> Column:
 def clean_cases(df: DataFrame, field_map: dict[str, str] | None = None) -> DataFrame:
     """The full kernel: Salesforce-shaped strings in, CASE_CLEAN out.
 
-    One declarative ``select`` — Catalyst fuses every expression into a
-    single whole-stage-codegen projection; the only Python hop is the
-    Arrow-batched NFKD UDF, shared by three columns.  Contrast with the
+    One declarative ``select`` — Catalyst fuses every expression,
+    the NFKD->ASCII fold of three columns included (ICU4J via
+    ``reflect``, ``functions/text.py``), into a single JVM projection
+    with no Python worker.  ``reflect`` is nondeterministic and
+    interpreted to Catalyst, so filters above this select stay above it
+    and the projection runs outside whole-stage codegen.  Contrast with the
     reference's per-row dict loop that materializes everything in driver
     memory (sync-db2.py:62-69 — the #1 anti-pattern at 100 TB).
 

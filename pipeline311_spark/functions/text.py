@@ -1,40 +1,47 @@
-"""Text normalization functions.
+"""Text normalization functions — all pure Column expressions.
 
-The single genuine Python UDF in the engine: NFKD->ASCII fold
-(reference: common.py:135,212 ``unicodedata.normalize('NFKD', s)
-.encode('ascii','ignore')``) — Spark has no builtin for Unicode
-normalization, so this is an Arrow-batched pandas UDF (SURVEY §7.4).
-Everything else here is pure Column expressions.
+The NFKD->ASCII fold (reference: common.py:135,212
+``unicodedata.normalize('NFKD', s).encode('ascii','ignore')``) has no
+Spark builtin, but ICU4J ships in Spark's own classpath (its collation
+support uses it): ``reflect`` calls the static
+``com.ibm.icu.text.Normalizer.decompose(s, compat=true)`` (= NFKD) and a
+``[^\\x00-\\x7F]`` delete is ``encode('ascii','ignore')``.  The fold runs
+inside the JVM projection — no Python worker, no Arrow round trip.
 """
 
 from __future__ import annotations
 
-import unicodedata
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+# Code points that ICU4J 77 (Unicode 16) folds to ASCII but Python 3.11's
+# ``unicodedata`` (Unicode 14) treats as unassigned and drops: the
+# "outlined" Latin letters and digits of Symbols for Legacy Computing
+# Supplement (ICU gives A-Z, 0-9).  Deleted before the ICU call so the
+# fold equals the reference's; every other code point already agrees
+# (pinned exhaustively by tests/test_cleaning.py::test_nfkd_ascii_exhaustive).
+ICU_ONLY_ASCII_FOLDS = (0x1CCD6, 0x1CCF9)
 
 
-@pandas_udf(T.StringType())
-def _nfkd_ascii_udf(s: pd.Series) -> pd.Series:
-    def fold(v):
-        if v is None:
-            return None
-        return unicodedata.normalize("NFKD", v).encode("ascii", "ignore").decode()
-
-    return s.map(fold, na_action="ignore")
+def _icu_nfkd_ascii(c: Column) -> Column:
+    """ICU NFKD then drop non-ASCII, with no reference alignment; the
+    input must be non-NULL (``decompose`` rejects null)."""
+    nfkd = F.reflect(
+        F.lit("com.ibm.icu.text.Normalizer"), F.lit("decompose"), c, F.lit(True)
+    )
+    return F.regexp_replace(nfkd, "[^\\x00-\\x7F]", "")
 
 
 def nfkd_ascii(col: Column | str) -> Column:
     """NFKD-normalize then drop non-ASCII (emoji, accents).
 
     Reference semantics: common.py:135 (description), :212 (status_notes).
-    Arrow-batched; NULL passes through.
+    A JVM-only expression (ICU4J via ``reflect``); NULL passes through.
     """
-    return _nfkd_ascii_udf(F.col(col) if isinstance(col, str) else col)
+    c = F.col(col) if isinstance(col, str) else col
+    lo, hi = ICU_ONLY_ASCII_FOLDS
+    aligned = F.regexp_replace(c, f"[\\x{{{lo:X}}}-\\x{{{hi:X}}}]", "")
+    return F.when(c.isNotNull(), _icu_nfkd_ascii(aligned))
 
 
 def strip_edge_chars(col: Column | str, chars: str = "<>'") -> Column:

@@ -142,3 +142,49 @@ def test_text_fields_null_to_empty(spark):
     assert out["subject"] == ""
     # datetime columns keep NULL (P14 convention is separate, edge-side)
     assert out["closed_datetime"] is None
+
+
+def test_nfkd_ascii_exhaustive(spark):
+    """``nfkd_ascii`` equals ``unicodedata.normalize('NFKD', s)
+    .encode('ascii', 'ignore').decode()`` on every non-surrogate code
+    point, each inside ASCII context, plus NULL.
+
+    Checking one code point at a time proves the fold equal on every
+    string: NFKD decomposes each code point independently, and canonical
+    reordering only moves marks with a nonzero combining class — no
+    ASCII character has one — so the ASCII residue of a string is the
+    concatenation of the residues of its code points.
+
+    Raw ICU (without the alignment strip) must disagree with Python on
+    exactly ``ICU_ONLY_ASCII_FOLDS``, so a Python or ICU upgrade that
+    moves the delta fails here instead of drifting silently."""
+    import unicodedata
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from pipeline311_spark.functions.text import (
+        ICU_ONLY_ASCII_FOLDS,
+        _icu_nfkd_ascii,
+        nfkd_ascii,
+    )
+
+    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    vals = ["a" + chr(c) + "b" for c in cps]
+    want = [unicodedata.normalize("NFKD", v).encode("ascii", "ignore").decode() for v in vals]
+    table = pa.table(
+        {"cp": cps + [-1], "v": vals + [None], "want": want + [None]},
+        schema=pa.schema([("cp", pa.int32()), ("v", pa.string()), ("want", pa.string())]),
+    )
+    df = spark.createDataFrame(table)
+    v, w = F.col("v"), F.col("want")
+    raw = F.when(v.isNotNull(), _icu_nfkd_ascii(v))
+    bad = df.select(
+        "cp",
+        (~nfkd_ascii(v).eqNullSafe(w)).alias("fold_diff"),
+        (~raw.eqNullSafe(w)).alias("raw_diff"),
+    ).filter("fold_diff OR raw_diff").collect()
+
+    assert [r["cp"] for r in bad if r["fold_diff"]] == []
+    lo, hi = ICU_ONLY_ASCII_FOLDS
+    assert {r["cp"] for r in bad if r["raw_diff"]} == set(range(lo, hi + 1))

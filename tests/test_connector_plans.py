@@ -67,9 +67,13 @@ def test_flagship_plan_quality(spark, sf_dir):
 def test_cleaning_kernel_single_stage(spark, sf_dir):
     # the whole P1-P12 kernel must fuse into one projection over the
     # scan — no shuffles/exchanges (the reference needed a full
-    # in-memory materialization; we need zero)
-    plan = explain_str(REGISTRY["pipeline_clean_cases"].fn(spark, sf_dir))
-    assert "Exchange" not in plan
+    # in-memory materialization; we need zero) — and the NFKD->ASCII
+    # fold stays in the JVM: no Python eval node in either plan
+    for name in ("pipeline_clean_cases", "pipeline_gold_projection"):
+        plan = explain_str(REGISTRY[name].fn(spark, sf_dir))
+        assert "Exchange" not in plan, name
+        assert "ArrowEvalPython" not in plan, name
+        assert "BatchEvalPython" not in plan, name
 
 
 def test_column_pruning_reaches_scan(spark, sf_dir):

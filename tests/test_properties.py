@@ -61,7 +61,7 @@ def py_clean(v):
 dirty_strings = st.one_of(
     st.none(),
     st.text(max_size=30),
-    st.text(alphabet="0123456789-PPD.district<>'é🚧 ", max_size=30),
+    st.text(alphabet="0123456789-PPD.district<>'é🚧 ﬁ①Ａ\U0001CCD6", max_size=30),
     st.sampled_from(["0", "false", "true", "911", "22nd", "1e3", "12.5", " 7 ", "<x>"]),
 )
 

@@ -71,7 +71,7 @@ STATIC = {
     "T4": ("same writer: max_tries/backoff retry envelope", "tests/test_streaming_sinks.py"),
     "T5": ("operators/telemetry.py observed (df.observe metrics) + Spark UI", "tests/test_operators.py"),
     "T6": ("sinks/writers.py throttle_s inter-batch pause", "tests/test_streaming_sinks.py"),
-    "T7": ("single pandas UDF (NFKD) + applyInPandas/mapInPandas ops", "tests/test_cleaning.py, tests/test_ext.py"),
+    "T7": ("NFKD fold in the JVM (ICU4J reflect, no UDF) + applyInPandas/mapInPandas ops", "tests/test_cleaning.py, tests/test_ext.py"),
     "P1": ("functions/cleaning.py rename_projection", "tests/test_cleaning.py"),
     "P2": ("functions/geo.py point_ewkt_from_xy", "tests/test_cleaning.py"),
     "P3": ("functions/cleaning.py clean_description", "tests/test_cleaning.py"),
