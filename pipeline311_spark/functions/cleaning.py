@@ -117,14 +117,19 @@ def text_field_guard(col: Column | str, max_len: int = 2000) -> Column:
 def clean_cases(df: DataFrame, field_map: dict[str, str] | None = None) -> DataFrame:
     """The full kernel: Salesforce-shaped strings in, CASE_CLEAN out.
 
-    One declarative ``select`` — Catalyst fuses every expression,
-    the NFKD->ASCII fold of three columns included (ICU4J via
-    ``reflect``, ``functions/text.py``), into a single JVM projection
-    with no Python worker.  ``reflect`` is nondeterministic and
-    interpreted to Catalyst, so filters above this select stay above it
-    and the projection runs outside whole-stage codegen.  Contrast with the
-    reference's per-row dict loop that materializes everything in driver
-    memory (sync-db2.py:62-69 — the #1 anti-pattern at 100 TB).
+    Two JVM projections, no Python worker.  The inner one holds only
+    the two NFKD->ASCII folds (ICU4J via ``reflect``,
+    ``functions/text.py``): the cleaned description, which feeds both
+    ``description`` and ``description_full``, and the cleaned status
+    notes.  ``reflect`` is nondeterministic to Catalyst, so
+    ``CollapseProject`` keeps that projection apart: each fold runs
+    once per row, and the outer projection — every other expression —
+    stays in whole-stage codegen.  A filter above this select is not
+    pushed below the folds; filter the source first (as
+    ``pipelines.sync_raw`` does) when only a few rows are wanted.
+    Contrast with the reference's per-row dict loop that materializes
+    everything in driver memory (sync-db2.py:62-69 — the #1
+    anti-pattern at 100 TB).
 
     The ~40-column expression tree costs ~0.5 s of driver time to build
     (hundreds of py4j round trips) vs ~0.05 s to execute at bench scale,
@@ -132,13 +137,27 @@ def clean_cases(df: DataFrame, field_map: dict[str, str] | None = None) -> DataF
     cycle — so the select list is memoized per field_map (Columns are
     immutable unresolved trees keyed only on source column names)."""
     fm_items = tuple((field_map or FIELD_MAP).items())
-    return df.select(list(_clean_case_cols(fm_items)))
+    folds, cols = _clean_case_cols(fm_items)
+    return df.select("*", *folds).select(list(cols))
+
+
+# Inner-projection names of the two folded values (never in the output).
+_DESC_FOLD = "__p311_description_fold"
+_NOTES_FOLD = "__p311_status_notes_fold"
 
 
 @jvm_memo(maxsize=8)
-def _clean_case_cols(fm_items: tuple[tuple[str, str], ...]) -> tuple[Column, ...]:
+def _clean_case_cols(
+    fm_items: tuple[tuple[str, str], ...],
+) -> tuple[tuple[Column, ...], tuple[Column, ...]]:
     fm = dict(fm_items)
-    cleaned_desc = clean_description(F.col(fm["description"]))
+    folds = (
+        clean_description(F.col(fm["description"])).alias(_DESC_FOLD),
+        status_notes_col(
+            F.col(fm["status"]), F.col("Close_Reason__c"), F.col("Status_Update__c")
+        ).alias(_NOTES_FOLD),
+    )
+    cleaned_desc = F.col(_DESC_FOLD)
 
     cols: dict[str, Column] = {}
     for dest, src in fm.items():
@@ -156,9 +175,7 @@ def _clean_case_cols(fm_items: tuple[tuple[str, str], ...]) -> tuple[Column, ...
     for prefix in ("requested", "updated", "expected", "closed"):
         dest = f"{prefix}_datetime"
         cols[dest] = lenient_timestamp(F.col(fm[dest]))
-    cols["status_notes"] = status_notes_col(
-        F.col(fm["status"]), F.col("Close_Reason__c"), F.col("Status_Update__c")
-    )
+    cols["status_notes"] = F.col(_NOTES_FOLD)
     cols["shape"] = point_ewkt(
         F.col("Centerline__Longitude__s"), F.col("Centerline__Latitude__s")
     )
@@ -175,4 +192,4 @@ def _clean_case_cols(fm_items: tuple[tuple[str, str], ...]) -> tuple[Column, ...
             "description"}]
         + ["shape"]
     )
-    return tuple(cols[name].alias(name) for name in order)
+    return folds, tuple(cols[name].alias(name) for name in order)

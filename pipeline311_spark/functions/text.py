@@ -36,12 +36,22 @@ def nfkd_ascii(col: Column | str) -> Column:
     """NFKD-normalize then drop non-ASCII (emoji, accents).
 
     Reference semantics: common.py:135 (description), :212 (status_notes).
-    A JVM-only expression (ICU4J via ``reflect``); NULL passes through.
+    A JVM-only expression (ICU4J via ``reflect``, skipped for all-ASCII
+    strings); NULL passes through.
+    ``reflect`` is nondeterministic to Catalyst: a projection holding
+    this fold stays out of whole-stage codegen, is never collapsed into
+    a projection that uses its output twice, and no filter is pushed
+    below it; Spark also rejects it inside an aggregate function
+    (fold in a ``select`` first, then aggregate).
     """
     c = F.col(col) if isinstance(col, str) else col
     lo, hi = ICU_ONLY_ASCII_FOLDS
     aligned = F.regexp_replace(c, f"[\\x{{{lo:X}}}-\\x{{{hi:X}}}]", "")
-    return F.when(c.isNotNull(), _icu_nfkd_ascii(aligned))
+    # An all-ASCII string is its own fold (NFKD leaves ASCII unchanged),
+    # so only rows with a non-ASCII character pay for the ICU call.
+    return F.when(~c.rlike("[^\\x00-\\x7F]"), c).when(
+        c.isNotNull(), _icu_nfkd_ascii(aligned)
+    )
 
 
 def strip_edge_chars(col: Column | str, chars: str = "<>'") -> Column:

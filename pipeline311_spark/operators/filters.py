@@ -9,7 +9,7 @@ any source (parquet, JDBC, DSv2) instead of being hand-embedded in SOQL
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -28,19 +28,21 @@ def static_source_filter(
     )
 
 
-def time_range(df: DataFrame, col: str, start, end) -> DataFrame:
+def time_range(df: DataFrame, col: Column | str, start, end) -> DataFrame:
     """F2: half-open window ``start <= c < end`` (sync-db2.py:52-55)."""
-    c = F.col(col)
+    c = F.col(col) if isinstance(col, str) else col
     return df.filter((c >= F.lit(start)) & (c < F.lit(end)))
 
 
-def watermark_filter(df: DataFrame, col: str, watermark, inclusive: bool = False) -> DataFrame:
+def watermark_filter(
+    df: DataFrame, col: Column | str, watermark, inclusive: bool = False
+) -> DataFrame:
     """F3 (strict ``>``, sync-db2.py:164-167) vs F4 (inclusive ``>=``,
     sync-db2-ago.py:552-557).  Both exposed because they have different
     replay behavior: ``>=`` re-processes the boundary row and is safe
     only into an idempotent (delete-then-add / MERGE) sink — SURVEY
     §7.5.5."""
-    c = F.col(col)
+    c = F.col(col) if isinstance(col, str) else col
     return df.filter(c >= F.lit(watermark) if inclusive else c > F.lit(watermark))
 
 

@@ -23,11 +23,15 @@ from pyspark.sql import functions as F
 from pipeline311_spark.functions.cleaning import clean_cases
 from pipeline311_spark.functions.geo import esri_point_feature, parse_point_ewkt
 from pipeline311_spark.functions.text import ago_sanitize
-from pipeline311_spark.functions.timeparse import to_local_string
-from pipeline311_spark.operators.filters import static_source_filter, time_range
+from pipeline311_spark.functions.timeparse import lenient_timestamp, to_local_string
+from pipeline311_spark.operators.filters import (
+    static_source_filter,
+    time_range,
+    watermark_filter,
+)
 from pipeline311_spark.operators.merge import merge_with_surrogate, upsert
 from pipeline311_spark.operators.reconcile import reconcile_deletes
-from pipeline311_spark.schemas import VIEWER_COLUMNS
+from pipeline311_spark.schemas import FIELD_MAP, VIEWER_COLUMNS
 from pipeline311_spark.sources.validate import dup_guard, validate_columns
 
 
@@ -40,16 +44,23 @@ def sync_raw(
 ) -> DataFrame:
     """sync-db2.py sync(): filter at source (F1), clean (P1-P12), then
     watermark-incremental upsert into the raw/bronze tier (F3+K3).
-    ``window`` switches to the year/month/day refresh path (F2/T2)."""
+    ``window`` switches to the year/month/day refresh path (F2/T2).
+
+    ``watermark_col`` names one of the kernel's ``*_datetime`` columns.
+    The window/watermark predicate is applied to the raw source, on the
+    same parse the kernel gives that column, before cleaning: Catalyst
+    does not push a filter below the kernel's nondeterministic fold
+    projection, so filtering after ``clean_cases`` would fold every
+    source row instead of only the changed ones."""
     filtered = static_source_filter(source)
-    clean = clean_cases(filtered)
+    src_wm = lenient_timestamp(F.col(FIELD_MAP[watermark_col]))
     if window is not None:
-        clean = time_range(clean, watermark_col, *window)
-        return upsert(target, clean, key, watermark_col)
+        changed = time_range(filtered, src_wm, *window)
+        return upsert(target, clean_cases(changed), key, watermark_col)
     w = target.agg(F.max(watermark_col)).first()[0]
     if w is not None:
-        clean = clean.filter(F.col(watermark_col) > F.lit(w))  # strict (F3)
-    return upsert(target, clean, key, watermark_col)
+        filtered = watermark_filter(filtered, src_wm, w)  # strict (F3)
+    return upsert(target, clean_cases(filtered), key, watermark_col)
 
 
 def publish_enterprise(bronze: DataFrame, silver: DataFrame) -> DataFrame:

@@ -147,7 +147,7 @@ def test_text_fields_null_to_empty(spark):
 def test_nfkd_ascii_exhaustive(spark):
     """``nfkd_ascii`` equals ``unicodedata.normalize('NFKD', s)
     .encode('ascii', 'ignore').decode()`` on every non-surrogate code
-    point, each inside ASCII context, plus NULL.
+    point, each inside ASCII context and alone, plus NULL.
 
     Checking one code point at a time proves the fold equal on every
     string: NFKD decomposes each code point independently, and canonical
@@ -169,8 +169,9 @@ def test_nfkd_ascii_exhaustive(spark):
         nfkd_ascii,
     )
 
-    cps = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
-    vals = ["a" + chr(c) + "b" for c in cps]
+    single = [c for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF]
+    cps = single + single
+    vals = ["a" + chr(c) + "b" for c in single] + [chr(c) for c in single]
     want = [unicodedata.normalize("NFKD", v).encode("ascii", "ignore").decode() for v in vals]
     table = pa.table(
         {"cp": cps + [-1], "v": vals + [None], "want": want + [None]},

@@ -65,8 +65,8 @@ def test_flagship_plan_quality(spark, sf_dir):
 
 
 def test_cleaning_kernel_single_stage(spark, sf_dir):
-    # the whole P1-P12 kernel must fuse into one projection over the
-    # scan — no shuffles/exchanges (the reference needed a full
+    # the whole P1-P12 kernel must run as projections over the scan
+    # in one stage — no shuffles/exchanges (the reference needed a full
     # in-memory materialization; we need zero) — and the NFKD->ASCII
     # fold stays in the JVM: no Python eval node in either plan
     for name in ("pipeline_clean_cases", "pipeline_gold_projection"):
@@ -74,6 +74,30 @@ def test_cleaning_kernel_single_stage(spark, sf_dir):
         assert "Exchange" not in plan, name
         assert "ArrowEvalPython" not in plan, name
         assert "BatchEvalPython" not in plan, name
+
+
+def test_cleaning_kernel_folds_once(spark, sf_dir):
+    """Each NFKD fold runs once per row: the cleaned description feeds
+    both ``description`` and ``description_full``, and ``reflect`` is
+    nondeterministic, so subexpression elimination would not share a
+    fold written twice.  The folds sit in their own projection, which
+    leaves the rest of the kernel — the output projection — inside
+    whole-stage codegen."""
+    plan = REGISTRY["pipeline_clean_cases"].fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    folds = sum(
+        n.projectList().toString().count("com.ibm.icu.text.Normalizer")
+        for n in walk(plan)
+        if n.nodeName() == "Project"
+    )
+    assert folds == 2, plan.treeString()  # description + status_notes
+    assert plan.nodeName().startswith("WholeStageCodegen"), plan.treeString()
 
 
 def test_column_pruning_reaches_scan(spark, sf_dir):

@@ -123,3 +123,38 @@ def test_backfill_window_path(spark, source):
     assert got.count() == 3
     none = sync_raw(source, bronze0, window=("2020-01-01 00:00:00", "2020-02-01 00:00:00"))
     assert none.count() == 0
+
+
+@pytest.mark.parametrize("window", [None, ("2024-03-15 00:00:00", "2024-03-16 00:00:00")])
+def test_sync_raw_filters_below_fold(spark, source, window):
+    """The watermark/window predicate must sit BELOW the cleaning
+    kernel's NFKD fold projection, so an incremental sync folds only the
+    changed rows.  ``reflect`` is nondeterministic, so Catalyst never
+    moves a filter across that projection by itself — ``sync_raw`` has
+    to filter the raw source (``LastModifiedDate``) first."""
+    from pipeline311_spark.functions.cleaning import clean_cases
+
+    cleaned = clean_cases(source)
+    # a materialized target with a non-NULL watermark and no kernel in
+    # its lineage, so the only fold projection is the source side's
+    target = spark.createDataFrame(cleaned.collect(), cleaned.schema)
+    out = sync_raw(source, target, window=window)
+
+    def walk(node, above=()):
+        yield node, above
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i), above + (node,))
+
+    def is_fold(node):
+        return node.nodeName() == "Project" and "Normalizer" in node.projectList().toString()
+
+    nodes = list(walk(out._jdf.queryExecution().optimizedPlan()))
+    plan = out._jdf.queryExecution().optimizedPlan().treeString()
+    assert sum(is_fold(n) for n, _ in nodes) == 1, plan
+    src_filters = [
+        above for n, above in nodes
+        if n.nodeName() == "Filter" and "LastModifiedDate" in n.condition().toString()
+    ]
+    assert len(src_filters) == 1, plan
+    assert any(is_fold(a) for a in src_filters[0]), plan

@@ -104,7 +104,7 @@ STATIC = {
     "ext:ann-train": ("Lloyd-trained coarse cells + residual-trained codebook, cell-balance audit (ann_cells_train / ann_index_build_trained)", "tests/test_ann_store.py"),
     "ext:hybrid-serve": ("hybrid RRF with BOTH rankers served from stored artifacts (BM25 store + ANN codes; plans/curation3.hybrid_rrf_frame)", "tests/test_retrieval_store.py (plan-asserted)"),
     "ext:bm25-delete-stream": ("real two-stream lifecycle: independent append and delete Structured Streaming jobs (separate checkpoints) maintaining one BM25 index (plans/index_delete.py)", "tests/test_index_delete.py (negative key-space)"),
-    "P-class": ("functions/cleaning.py + timeparse.py + geo.py + text.py — the P1-P19 kernel family as one projection (plans/pipeline_clean.py)", "tests/test_cleaning.py; oracle gate (pipeline_clean_cases, pipeline_gold_projection)"),
+    "P-class": ("functions/cleaning.py + timeparse.py + geo.py + text.py — the P1-P19 kernel family as one stage of projections (plans/pipeline_clean.py)", "tests/test_cleaning.py; oracle gate (pipeline_clean_cases, pipeline_gold_projection)"),
     "ext:bm25-update": ("BM25 document update = delete old id + fresh-id-guarded re-append + compact (plans/index_update.py)", "tests/test_index_update.py"),
     "ext:gram-update": ("gram-log document update under the id-reuse contract (plans/index_update.py)", "tests/test_index_update.py"),
     "ext:ann-update": ("ANN codes document update under the frozen quantizer (plans/index_update.py)", "tests/test_index_update.py"),
